@@ -16,9 +16,9 @@ where ``dlq`` is the SmallFloat-byte4 *quantized* doc length
 numerator factor (rank-neutral); we follow.
 
 Plan shape (scale notes):
-- query terms are a tiny DataFrame → **broadcast** join against postings;
-  the postings side is filtered *before* any aggregation, so only rows
-  for query terms move.
+- query terms are an ``isin`` predicate on the postings scan (no term
+  table, so no side job to build and broadcast one); the postings side is
+  filtered *before* any aggregation, so only rows for query terms move.
 - document frequency per term is computed from the filtered postings
   (postings rows are distinct (term, docID) pairs), then broadcast back.
 - one final ``groupBy(docID)`` shuffle over candidate rows only
@@ -123,8 +123,7 @@ def bm25_clause_scores(
         return postings.sparkSession.range(0).select(
             F.col("id").alias("docID"), F.lit(0.0).alias("score")
         )
-    qt = F.broadcast(spark.createDataFrame([(t,) for t in terms], "term string"))
-    matched = postings.join(qt, "term")
+    matched = postings.where(F.col("term").isin(terms))
     # document frequency per query term over the full corpus: postings rows
     # are distinct (term, docID), so a plain count is n_t
     dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
@@ -169,12 +168,9 @@ def match_only_text_scores(engine: "BM25Engine", query_text: str) -> DataFrame:
         return engine.spark.range(0).select(
             F.col("id").alias("docID"), F.lit(0.0).alias("score")
         )
-    qt = F.broadcast(
-        engine.spark.createDataFrame([(t,) for t in terms], "term string")
-    )
     # postings rows are distinct (term, docID) → count(*) = distinct terms
     return (
-        engine.postings.join(qt, "term")
+        engine.postings.where(F.col("term").isin(terms))
         .groupBy("docID")
         .agg(F.count("*").cast("double").alias("score"))
     )
@@ -191,7 +187,7 @@ def match_bool_prefix_scores(engine: "BM25Engine", query_text: str) -> DataFrame
     (msm=1). Terms need no positions — unlike the phrase variant, word
     order is free.
 
-    Plan shape: the fixed terms reuse the standard broadcast clause path;
+    Plan shape: the fixed terms reuse the standard clause path;
     the prefix expansion walks the distinct-term dictionary and
     semi-joins postings under the settings broadcast cap — nothing scans
     stored text."""
@@ -540,16 +536,13 @@ def prefix_query_scores(engine: "BM25Engine", prefix: str) -> DataFrame:
 
 def terms_query_scores(engine: "BM25Engine", terms: list[str]) -> DataFrame:
     """Lucene ``terms`` query (constant-score): docs containing ANY of the
-    exact terms score 1.0. One broadcast semi-filter over postings."""
+    exact terms score 1.0. One ``isin`` filter over postings."""
     from neural_search_spark import stats as _stats
 
     _stats.record_event("terms_query_requests")
     tl = sorted({t.lower() for t in terms})
-    qt = F.broadcast(
-        engine.spark.createDataFrame([(t,) for t in tl], "term string")
-    )
     return (
-        engine.postings.join(qt, "term")
+        engine.postings.where(F.col("term").isin(tl))
         .select("docID")
         .distinct()
         .select("docID", F.lit(1.0).alias("score"))
@@ -1069,10 +1062,7 @@ def match_phrase_prefix_scores(
     fixed, prefix = terms[:-1], terms[-1]
     m = len(terms)
     distinct_fixed = sorted(set(fixed))
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in distinct_fixed], "term string")
-    )
-    matched = postings.join(qt, "term")
+    matched = postings.where(F.col("term").isin(distinct_fixed))
     dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
     pos_df = F.broadcast(
         spark.createDataFrame(list(enumerate(fixed)), "pos int, term string")

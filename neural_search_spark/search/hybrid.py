@@ -22,10 +22,15 @@ declarative DataFrame plan:
   and collapse (best doc per field value,
   ``search/collector/HybridCollapsingTopDocsCollector.java``).
 
-Scale shape: clause scores are unioned long-form ``(docID, clause, score)``
-and pivoted in a single groupBy — one shuffle for any clause count,
-instead of k-1 outer joins. Normalization stats are 1-row aggregates
-cross-joined back (broadcast, no extra shuffle of the data).
+Scale shape: one request is one plan. Clauses are tagged with their index
+``_c`` and unioned long-form ``(docID, _c, score)``; a ``row_number()``
+window partitioned by ``_c`` makes the depth cut (a ``WindowGroupLimit``
+ahead of the exchange: at most depth rows per clause leave a map task) and
+normalization stats are window aggregates over the same partition, so no
+clause is cached, aggregated apart or joined back. One groupBy pivots the
+clauses into columns — one shuffle for any clause count. With
+``depth=None`` each clause's stats window runs in one task over all its
+matches: the one-task-per-clause contract the rrf depth guard enforces.
 """
 
 from __future__ import annotations
@@ -101,12 +106,33 @@ def describe_combination(technique: str, weights: list[float] | None = None) -> 
     return f"{technique} combination of:"
 
 
+def _tag(frames: list[DataFrame], col: str | None = None) -> DataFrame:
+    """Per-clause frames → one long ``(docID, _c, score)`` frame tagged by
+    clause index. ``col`` names the score column; ``None`` takes each
+    frame's first non-docID column."""
+
+    def tagged(i, df):
+        score = col or next(c for c in df.columns if c != "docID")
+        return df.select("docID", F.lit(i).alias("_c"), F.col(score).alias("score"))
+
+    return reduce(DataFrame.unionByName, [tagged(i, df) for i, df in enumerate(frames)])
+
+
+def _rank_cut(tagged: DataFrame, depth: int | None, by: tuple[str, ...] = ()) -> DataFrame:
+    """Rank each clause (``by`` + ``_c``) by (score desc, docID asc) into
+    ``_rn`` and keep its top ``depth`` docs (numHits); ``None`` keeps all.
+    Spark plans the cut as a ``WindowGroupLimit`` ahead of the exchange."""
+    w = Window.partitionBy(*by, "_c").orderBy(F.desc("score"), F.asc("docID"))
+    ranked = tagged.withColumn("_rn", F.row_number().over(w))
+    return ranked if depth is None else ranked.where(F.col("_rn") <= int(depth))
+
+
 def clause_depth_cut(scored: DataFrame, depth: int | None) -> DataFrame:
     """Per-clause collection depth (numHits): keep top ``depth`` docs by
     (score desc, docID asc). ``None`` keeps all matches."""
     if depth is None:
         return scored
-    return scored.orderBy(F.desc("score"), F.asc("docID")).limit(depth)
+    return _rank_cut(scored.withColumn("_c", F.lit(0)), depth).drop("_c", "_rn")
 
 
 def _effective_bounds(s, mn, mx, lower_bound, upper_bound):
@@ -142,6 +168,74 @@ def _effective_bounds(s, mn, mx, lower_bound, upper_bound):
     return eff_min, eff_max
 
 
+def _min_max_score(s, mn, mx, lower_bound, upper_bound):
+    """min_max normalized score under one clause's bounds."""
+    eff_min, eff_max = _effective_bounds(s, mn, mx, lower_bound, upper_bound)
+    raw = (s - eff_min) / (eff_max - eff_min)
+    # normalizeSingleScore branch order (MinMaxScoreNormalizationTechnique
+    # .java:258-280): single-score → 1.0; clip-below → MIN_SCORE;
+    # clip-above → MAX_SCORE; effMax==effMin → 1.0; raw==0 → MIN_SCORE.
+    n = F.when((mx == mn) & (mx == s), F.lit(1.0))
+    if lower_bound is not None and lower_bound[0] == "clip":
+        n = n.when(s < eff_min, F.lit(MIN_SCORE))
+    if upper_bound is not None and upper_bound[0] == "clip":
+        n = n.when(s > eff_max, F.lit(MAX_SCORE))
+    return n.when(eff_max == eff_min, F.lit(1.0)).otherwise(
+        F.when(raw == 0.0, F.lit(MIN_SCORE)).otherwise(raw)
+    )
+
+
+def _normalize_tagged(
+    tagged: DataFrame, technique: str, depth: int | None, rank_constant: int,
+    lower_bounds: list, upper_bounds: list, by: tuple[str, ...] = (),
+) -> DataFrame:
+    """(*by, docID, _c, score) → (*by, docID, _c, normalized score): cut
+    each clause to ``depth`` and normalize it with its own stats, taken as
+    window aggregates over the clause partition on the cut rows (no
+    aggregate joined back, so each clause plan is referenced once)."""
+    if technique != "min_max" and any(b is not None for b in [*lower_bounds, *upper_bounds]):
+        raise ValueError("bounds are only supported by min_max normalization")
+    if depth is not None or technique == "rrf":
+        tagged = _rank_cut(tagged, depth, by)
+    s = F.col("score")
+    clause = Window.partitionBy(*by, "_c")
+    if technique == "min_max":
+        df = tagged.select("*", F.min(s).over(clause).alias("_mn"), F.max(s).over(clause).alias("_mx"))
+        mn, mx = F.col("_mn"), F.col("_mx")
+        bounds = list(zip(lower_bounds, upper_bounds))
+        n = _min_max_score(s, mn, mx, *bounds[0])
+        if any(b != bounds[0] for b in bounds):
+            n = F.when(F.col("_c") == 0, n)
+            for i, (lb, ub) in enumerate(bounds[1:], start=1):
+                n = n.when(F.col("_c") == i, _min_max_score(s, mn, mx, lb, ub))
+    elif technique == "l2":
+        df = tagged.select("*", F.sqrt(F.sum(s * s).over(clause)).alias("_norm"))
+        n = F.when(F.col("_norm") == 0.0, F.lit(0.0)).otherwise(s / F.col("_norm"))
+    elif technique == "z_score":
+        df = tagged.select(
+            "*",
+            F.avg(s).over(clause).alias("_mean"),
+            F.coalesce(F.stddev_samp(s).over(clause), F.lit(0.0)).alias("_sd"),
+            F.max(s).over(clause).alias("_mx"),
+            F.min(s).over(clause).alias("_mn"),
+        )
+        z = (s - F.col("_mean")) / F.col("_sd")
+        n = (
+            F.when(s == F.col("_mean"), F.col("_mx"))  # s==mean → clause max
+            .when(F.col("_sd") == 0.0, F.col("_mn"))  # sd==0 → clause min
+            .otherwise(F.when(z <= 0.0, F.lit(MIN_SCORE)).otherwise(z))
+        )
+    elif technique == "rrf":
+        # 1/(rank_constant + pos + 1), BigDecimal scale 10 HALF_UP
+        # (RRFNormalizationTechnique.java:136-138); rank within the clause's
+        # collected order = score desc, docID asc
+        df = tagged
+        n = F.round(F.lit(1.0) / (F.lit(rank_constant) + F.col("_rn")), 10)
+    else:
+        raise ValueError(technique)
+    return df.select(*by, "docID", "_c", n.alias("score"))
+
+
 def normalize_clause(
     scored: DataFrame,
     technique: str,
@@ -155,82 +249,20 @@ def normalize_clause(
     pairs, min_max only — ``MinMaxScoreNormalizationTechnique.java:258-295``
     with the bound substitution/clip rules from ``normalization/bounds/``.
     """
-    s = F.col("score")
-    if technique != "min_max" and (lower_bound is not None or upper_bound is not None):
-        raise ValueError("bounds are only supported by min_max normalization")
-    if technique == "min_max":
-        stats = scored.agg(F.min("score").alias("_mn"), F.max("score").alias("_mx"))
-        df = scored.crossJoin(F.broadcast(stats))
-        mn, mx = F.col("_mn"), F.col("_mx")
-        eff_min, eff_max = _effective_bounds(s, mn, mx, lower_bound, upper_bound)
-        raw = (s - eff_min) / (eff_max - eff_min)
-        # normalizeSingleScore branch order (MinMaxScoreNormalizationTechnique
-        # .java:258-280): single-score → 1.0; clip-below → MIN_SCORE;
-        # clip-above → MAX_SCORE; effMax==effMin → 1.0; raw==0 → MIN_SCORE.
-        n = F.when((mx == mn) & (mx == s), F.lit(1.0))
-        if lower_bound is not None and lower_bound[0] == "clip":
-            n = n.when(s < eff_min, F.lit(MIN_SCORE))
-        if upper_bound is not None and upper_bound[0] == "clip":
-            n = n.when(s > eff_max, F.lit(MAX_SCORE))
-        n = n.when(eff_max == eff_min, F.lit(1.0)).otherwise(
-            F.when(raw == 0.0, F.lit(MIN_SCORE)).otherwise(raw)
-        )
-        return df.select("docID", n.alias("nscore"))
-    if technique == "l2":
-        stats = scored.agg(F.sqrt(F.sum(s * s)).alias("_norm"))
-        df = scored.crossJoin(F.broadcast(stats))
-        n = F.when(F.col("_norm") == 0.0, F.lit(0.0)).otherwise(s / F.col("_norm"))
-        return df.select("docID", n.alias("nscore"))
-    if technique == "z_score":
-        stats = scored.agg(
-            F.avg("score").alias("_mean"),
-            F.coalesce(F.stddev_samp("score"), F.lit(0.0)).alias("_sd"),
-            F.max("score").alias("_mx"),
-            F.min("score").alias("_mn"),
-        )
-        df = scored.crossJoin(F.broadcast(stats))
-        z = (s - F.col("_mean")) / F.col("_sd")
-        n = (
-            F.when(s == F.col("_mean"), F.col("_mx"))  # s==mean → clause max
-            .when(F.col("_sd") == 0.0, F.col("_mn"))  # sd==0 → clause min
-            .otherwise(F.when(z <= 0.0, F.lit(MIN_SCORE)).otherwise(z))
-        )
-        return df.select("docID", n.alias("nscore"))
-    if technique == "rrf":
-        # 1/(rank_constant + pos + 1), BigDecimal scale 10 HALF_UP
-        # (RRFNormalizationTechnique.java:136-138); rank within the clause's
-        # collected order = score desc, docID asc
-        w = Window.orderBy(F.desc("score"), F.asc("docID"))
-        rn = F.row_number().over(w)
-        n = F.round(F.lit(1.0) / (F.lit(rank_constant) + rn), 10)
-        return scored.select("docID", n.alias("nscore"))
-    raise ValueError(technique)
+    tagged = _tag([scored], "score")
+    normalized = _normalize_tagged(tagged, technique, None, rank_constant, [lower_bound], [upper_bound])
+    return normalized.select("docID", F.col("score").alias("nscore"))
 
 
-def combine_clauses(
-    normalized: list[DataFrame],
-    technique: str = "arithmetic_mean",
-    weights: list[float] | None = None,
-) -> DataFrame:
-    """Per-doc combination over zero-filled per-clause score columns."""
-    n = len(normalized)
+def _combine_tagged(normalized: DataFrame, n: int, technique: str, weights: list[float] | None) -> DataFrame:
+    """(docID, _c, score) over ``n`` clauses → (docID, score, s_0..s_{n-1}),
+    combined per doc over zero-filled per-clause score columns."""
     validate_weights(weights, n)
     w = weights or [1.0] * n
-    long = reduce(
-        DataFrame.unionByName,
-        [
-            df.select(
-                F.col("docID"),
-                F.lit(i).alias("_c"),
-                F.col([c for c in df.columns if c != "docID"][0]).alias("nscore"),
-            )
-            for i, df in enumerate(normalized)
-        ],
-    )
     # one shuffle: pivot clause scores into columns, zero-fill absent
-    wide = long.groupBy("docID").agg(
+    wide = normalized.groupBy("docID").agg(
         *[
-            F.coalesce(F.sum(F.when(F.col("_c") == i, F.col("nscore"))), F.lit(0.0)).alias(f"s_{i}")
+            F.coalesce(F.sum(F.when(F.col("_c") == i, F.col("score"))), F.lit(0.0)).alias(f"s_{i}")
             for i in range(n)
         ]
     )
@@ -259,13 +291,21 @@ def combine_clauses(
     return wide.select("docID", comb.alias("score"), *[F.col(f"s_{i}") for i in range(n)])
 
 
+def combine_clauses(
+    normalized: list[DataFrame],
+    technique: str = "arithmetic_mean",
+    weights: list[float] | None = None,
+) -> DataFrame:
+    """Per-doc combination over zero-filled per-clause score columns."""
+    return _combine_tagged(_tag(normalized), len(normalized), technique, weights)
+
+
 def hybrid_raw_sum(clause_scores: list[DataFrame]) -> DataFrame:
     """Aggregation-path scoring (§2.7): each doc matched by any clause is
     seen once with score = SUM of raw sub-query scores
     (``query/HybridQueryScorer.java:104-120``, ``HybridSubQueryScorer.java:28-36``).
     """
-    long = reduce(DataFrame.unionByName, [df.select("docID", "score") for df in clause_scores])
-    return long.groupBy("docID").agg(F.sum("score").alias("score"))
+    return _tag(clause_scores, "score").groupBy("docID").agg(F.sum("score").alias("score"))
 
 
 def hybrid_batch_topk(
@@ -277,10 +317,11 @@ def hybrid_batch_topk(
     """MANY hybrid requests (min_max + arithmetic_mean, the reference's
     default processor pair) in ONE grouped plan → (qid, docID, score).
 
-    Every request's lexical clauses are scored off a single postings
-    scan (one broadcast (qid, clause, term) table), depth-cut, min-max
-    normalized and mean-combined with windows/groupBys keyed by
-    (qid, clause) — the set-oriented restatement of the per-request
+    Every request's lexical clauses are scored in one
+    :func:`bm25_batch_scores` pass (one postings scan), then depth-cut and
+    min-max normalized by the same clause windows as :func:`hybrid_search`
+    (partitioned by qid too) and mean-combined per (qid, docID) — the
+    set-oriented restatement of the per-request
     NormalizationProcessor pipeline for offline eval sets and query logs.
     Per-request numbers are IEEE-identical to :func:`hybrid_search`: the
     pivot into fixed per-clause columns keeps the combine's add order
@@ -292,71 +333,35 @@ def hybrid_batch_topk(
     postings join + one (qid, clause, docID) aggregation; everything
     after the depth cut is bounded by Q × clauses × depth rows."""
     from neural_search_spark import settings
-    from neural_search_spark.search.bm25 import idf_col
+    from neural_search_spark.search.bm25 import bm25_batch_scores
 
     max_sub = int(settings.get("hybrid_max_sub_queries"))
-    rows = []
-    for qid, clauses in sorted(batches.items()):
-        if not 1 <= len(clauses) <= max_sub:
-            raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
-        for ci, terms in enumerate(clauses):
-            for t in sorted(set(terms)):
-                rows.append((int(qid), ci, t))
+    if any(not 1 <= len(clauses) <= max_sub for clauses in batches.values()):
+        raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
     spark = engine.spark
-    if not rows:
+    if not any(t for clauses in batches.values() for terms in clauses for t in terms):
         return spark.range(0).select(
             F.col("id").cast("int").alias("qid"),
             F.col("id").alias("docID"),
             F.lit(0.0).alias("score"),
         )
-    qt = F.broadcast(
-        spark.createDataFrame(rows, "qid int, cidx int, term string")
+    # every clause is one batch query keyed qid * max_sub + clause index
+    keyed = {
+        int(qid) * max_sub + ci: terms for qid, clauses in batches.items() for ci, terms in enumerate(clauses)
+    }
+    scored = bm25_batch_scores(spark, engine.postings, engine.doclens, engine.stats, keyed)
+    clause_scores = scored.select(
+        F.floor(F.col("qid") / max_sub).cast("int").alias("qid"),
+        F.pmod("qid", F.lit(max_sub)).alias("_c"),
+        "docID",
+        "score",
     )
-    postings, doclens, stats = engine.postings, engine.doclens, engine.stats
-    dfreq = (
-        postings.join(F.broadcast(qt.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("ndoc"))
-    )
-    matched = (
-        postings.join(qt, "term")
-        .join(F.broadcast(dfreq), "term")
-        .join(doclens, "docID")
-    )
-    tf = F.col("tf").cast("double")
-    tf_norm = tf / (
-        tf
-        + F.lit(1.2) * (F.lit(1.0 - 0.75) + F.lit(0.75) * F.col("dlq") / F.lit(stats.avgdl))
-    )
-    clause_scores = matched.groupBy("qid", "cidx", "docID").agg(
-        F.sum(idf_col(stats.n_docs, F.col("ndoc")) * tf_norm).alias("score")
-    )
-    if depth is not None:
-        wd = Window.partitionBy("qid", "cidx").orderBy(
-            F.col("score").desc(), F.col("docID").asc()
-        )
-        clause_scores = (
-            clause_scores.withColumn("_rn", F.row_number().over(wd))
-            .where(F.col("_rn") <= int(depth))
-            .drop("_rn")
-        )
-    st = clause_scores.groupBy("qid", "cidx").agg(
-        F.min("score").alias("_mn"), F.max("score").alias("_mx")
-    )
-    j = clause_scores.join(F.broadcast(st), ["qid", "cidx"])
-    s, mn, mx = F.col("score"), F.col("_mn"), F.col("_mx")
-    raw = (s - mn) / (mx - mn)
-    n = (
-        F.when((mx == mn) & (mx == s), F.lit(1.0))
-        .when(mx == mn, F.lit(1.0))
-        .otherwise(F.when(raw == 0.0, F.lit(MIN_SCORE)).otherwise(raw))
-    )
-    normalized = j.select("qid", "cidx", "docID", n.alias("nscore"))
+    normalized = _normalize_tagged(clause_scores, "min_max", depth, 60, [None], [None], by=("qid",))
     maxc = max(len(c) for c in batches.values())
     wide = normalized.groupBy("qid", "docID").agg(
         *[
             F.coalesce(
-                F.sum(F.when(F.col("cidx") == i, F.col("nscore"))), F.lit(0.0)
+                F.sum(F.when(F.col("_c") == i, F.col("score"))), F.lit(0.0)
             ).alias(f"s_{i}")
             for i in range(maxc)
         ]
@@ -417,10 +422,10 @@ def hybrid_search(
         raise ValueError(f"hybrid query supports 1..{max_sub} sub-queries")
     validate_technique_pair(normalization, combination)
     if normalization == "rrf" and depth is None:
-        # rrf ranks via a global (unpartitioned) row_number window — safe
-        # ONLY over a depth-cut clause (<= depth rows through one task);
-        # unbounded input would funnel the whole clause through a single
-        # task, so the scale contract is enforced, not assumed
+        # rrf ranks via a row_number window per clause — safe ONLY over a
+        # depth-cut clause (<= depth rows through one task); unbounded
+        # input would funnel the whole clause through a single task, so
+        # the scale contract is enforced, not assumed
         raise ValueError("rrf normalization requires a per-clause depth (numHits) cut")
     # stats-API event counters (stats/events/EventStatName.java analog)
     from neural_search_spark import stats as _stats
@@ -453,21 +458,12 @@ def hybrid_search(
             raise ValueError("bounds list must have one entry per sub-query")
     lbs = lower_bounds or [None] * len(clause_scores)
     ubs = upper_bounds or [None] * len(clause_scores)
-    cut = [clause_depth_cut(df, depth) for df in clause_scores]
-    if depth is not None:
-        # every normalization technique references its clause twice (the
-        # 1-row stats aggregate + the broadcast-joined rescore), so an
-        # uncached clause plan executes twice end-to-end — ruinous when the
-        # clause itself is expensive (phrase verify, on-the-fly embedding).
-        # The depth cut bounds the cached footprint to <= depth rows per
-        # clause, so this is a guaranteed-tiny materialization, never a
-        # corpus-sized one.
-        cut = [df.cache() for df in cut]
-    normalized = [
-        normalize_clause(df, normalization, rank_constant, lower_bound=lb, upper_bound=ub)
-        for df, lb, ub in zip(cut, lbs, ubs)
-    ]
-    combined = combine_clauses(normalized, combination, weights)
+    # one plan: each clause is referenced once (tag → window cut and stats
+    # → pivot), so no clause needs caching to avoid running twice
+    normalized = _normalize_tagged(
+        _tag(clause_scores, "score"), normalization, depth, rank_constant, lbs, ubs
+    )
+    combined = _combine_tagged(normalized, len(clause_scores), combination, weights)
     if post_filter_docs is not None:
         combined = combined.join(post_filter_docs.select("docID"), "docID", "semi")
     if collapse is not None:

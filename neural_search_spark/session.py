@@ -16,6 +16,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's ``MemTotal``, at most 24g (24g where
+    ``/proc/meminfo`` is missing): a larger heap than the host can back
+    gets the JVM killed by the kernel instead of collected."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "neural-search-spark",
     master: str | None = None,
@@ -28,7 +40,7 @@ def get_spark(
     # local-mode "executor" memory is the driver JVM; the 1g default
     # GC-thrashes under 32 concurrent Arrow-UDF tasks (takes effect only if
     # this call creates the JVM, which it does in every entry path)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -249,26 +249,120 @@ def _oracle_hybrid(oracle_idx, clauses, norm, comb, weights, k, depth):
     return [(d, float(s)) for d, s in ranked[:k]]
 
 
-@pytest.mark.parametrize("norm,comb,weights", CONFIGS)
-def test_hybrid_e2e_vs_oracle(engine, oracle_idx, norm, comb, weights):
-    k, depth = 10, 50
-    clause_dfs = [engine.match(t) for t in CLAUSES]
-    got = [
-        (r["docID"], r["score"])
-        for r in hybrid_search(
-            clause_dfs, norm, comb, weights=weights, k=k, depth=depth
-        ).collect()
-    ]
-    want = _oracle_hybrid(oracle_idx, CLAUSES, norm, comb, weights, k, depth)
+def _assert_matches(got, want, *ctx):
     got_map = dict(got)
     want_map = dict(want)
-    assert set(got_map) == set(want_map), (norm, comb)
+    assert set(got_map) == set(want_map), ctx
     for d in got_map:
-        assert abs(got_map[d] - want_map[d]) <= DELTA, (norm, comb, d)
+        assert abs(got_map[d] - want_map[d]) <= DELTA, (*ctx, d)
     # rank-identical where score gaps exceed float32 noise
     for (gd, gs), (wd, ws) in zip(got, want):
         if gd != wd:
-            assert abs(gs - ws) <= 2 * DELTA, (norm, comb, gd, wd)
+            assert abs(gs - ws) <= 2 * DELTA, (*ctx, gd, wd)
+
+
+def _hybrid_rows(engine, clauses, norm, comb, weights=None, k=10, depth=50, **kw):
+    out = hybrid_search([engine.match(t) for t in clauses], norm, comb, weights=weights, k=k, depth=depth, **kw)
+    return [(r["docID"], r["score"]) for r in out.collect()]
+
+
+@pytest.mark.parametrize("norm,comb,weights", CONFIGS)
+def test_hybrid_e2e_vs_oracle(engine, oracle_idx, norm, comb, weights):
+    k, depth = 10, 50
+    got = _hybrid_rows(engine, CLAUSES, norm, comb, weights, k, depth)
+    want = _oracle_hybrid(oracle_idx, CLAUSES, norm, comb, weights, k, depth)
+    _assert_matches(got, want, norm, comb)
+
+
+# ---------------------------------------------------------------- tagged-plan edge cases
+
+PAIRS = list(dict.fromkeys((norm, comb) for norm, comb, _ in CONFIGS))  # the six pairs
+# every clause's terms outside the vocabulary → an empty ``_c`` partition
+EMPTY_CLAUSE = ("import ident0", "zzqx nosuchterm", "def class ident1")
+FIVE_CLAUSES = ("import ident0", "def class ident1", "return self", "ident2 ident3", "class import ident4")
+
+
+@pytest.mark.parametrize("norm,comb", PAIRS)
+@pytest.mark.parametrize("clauses", [EMPTY_CLAUSE, FIVE_CLAUSES], ids=["empty_clause", "five_clauses"])
+def test_hybrid_edge_cases_vs_oracle(engine, oracle_idx, clauses, norm, comb):
+    got = _hybrid_rows(engine, clauses, norm, comb)
+    want = _oracle_hybrid(oracle_idx, clauses, norm, comb, None, 10, 50)
+    _assert_matches(got, want, norm, comb, len(clauses))
+
+
+def _min_max_bounded(scores, lb, ub):
+    """Python twin of min_max with ``normalization/bounds/`` rules."""
+    mn, mx = min(scores.values()), max(scores.values())
+    out = {}
+    for d, s in scores.items():
+        eff_min, eff_max = mn, mx
+        if lb is not None:
+            mode, b = lb
+            if mode == "apply":
+                eff_min = b if mx > b and s > b else mn
+            elif mode == "clip":
+                eff_min = mn if mx < b else b
+        if ub is not None:
+            mode, b = ub
+            if mode == "apply":
+                eff_max = b if mn < b and s < b else mx
+            elif mode == "clip":
+                eff_max = mx if mn > b else b
+        if mx == mn and mx == s:
+            out[d] = 1.0
+        elif lb is not None and lb[0] == "clip" and s < eff_min:
+            out[d] = 0.001
+        elif ub is not None and ub[0] == "clip" and s > eff_max:
+            out[d] = 1.0
+        elif eff_max == eff_min:
+            out[d] = 1.0
+        else:
+            raw = (s - eff_min) / (eff_max - eff_min)
+            out[d] = 0.001 if raw == 0.0 else raw
+    return out
+
+
+@pytest.mark.parametrize("comb", ["arithmetic_mean", "geometric_mean", "harmonic_mean"])
+def test_hybrid_per_clause_bounds_mixing_none_and_clip(engine, oracle_idx, comb):
+    """Per-clause bounds become ``_c`` arms of one expression: a clause
+    without bounds must keep plain min_max while its neighbours clip."""
+    from neural_search_spark.analysis.tokenizer import tokenize_text
+
+    clauses = ("import ident0", "def class ident1", "return self")
+    lows = [("clip", 1.0), None, ("apply", 0.5)]
+    ups = [None, ("clip", 2.0), None]
+    got = _hybrid_rows(engine, clauses, "min_max", comb, lower_bounds=lows, upper_bounds=ups)
+    per = []
+    for text, lb, ub in zip(clauses, lows, ups):
+        scores = oracle_idx.clause_scores(tokenize_text(text))
+        cut = dict(sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:50])
+        per.append(_min_max_bounded({d: float(v) for d, v in cut.items()}, lb, ub))
+    combined = obm.combine(per, comb)
+    want = [(d, float(s)) for d, s in sorted(combined.items(), key=lambda kv: (-kv[1], kv[0]))[:10]]
+    _assert_matches(got, want, comb)
+
+
+@pytest.mark.parametrize(
+    "clauses,ceiling",
+    [(CLAUSES, 11), (CLAUSES + ("return self ident2",), 15)],
+    ids=["2_clauses", "3_clauses"],
+)
+def test_hybrid_request_job_ceiling_and_no_leftover_cache(spark, engine, clauses, ceiling):
+    """One hybrid request is one tagged plan: its Spark job count stays at
+    the ceiling measured on this session shape (local[4], 8 shuffle
+    partitions), and it leaves no cached table behind."""
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    _hybrid_rows(engine, clauses, "min_max", "arithmetic_mean")  # warm the engine caches
+    group = f"hybrid-ceiling-{len(clauses)}"
+    before = cache.numCachedEntries()
+    sc.setJobGroup(group, group)
+    try:
+        _hybrid_rows(engine, clauses, "min_max", "arithmetic_mean")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert cache.numCachedEntries() == before
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= ceiling
 
 
 def test_rrf_requires_depth(spark):

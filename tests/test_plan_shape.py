@@ -66,8 +66,8 @@ def test_phrase_default_routes_through_positional_index(spark, entry):
 def test_delegate_raw_routes_are_artifact_bounded(spark, entry):
     """The delegate raw-type routes never join the corpus against itself:
     token_count is a filter over the per-doc length artifact (its one
-    exchange is the output sort), match_only_text is one broadcast join +
-    one agg ending in TakeOrderedAndProject."""
+    exchange is the output sort), match_only_text is one ``isin``-filtered
+    postings scan + one agg ending in TakeOrderedAndProject."""
     qmap = entry.queries()
     p = _plan(qmap["semantic_raw_token_count"](spark, SF_DIR))
     assert p.count(") Exchange") <= 1
