@@ -80,7 +80,8 @@ def term_freqs_udf(texts: pd.Series) -> pd.DataFrame:
 
 
 def term_freq_rows(df, text_col: str, id_col: str):
-    """corpus → long-form postings rows ``(docID, term, tf)``.
+    """corpus → long-form postings rows ``(docID, term, tf, dl)``, where
+    ``dl`` is the document's length in tokens, repeated on each of its rows.
 
     This is the engine's (term, docID, tf) emission step
     (BASELINE.json north_star). Wholly Arrow-vectorized; the explode runs
@@ -90,7 +91,7 @@ def term_freq_rows(df, text_col: str, id_col: str):
 
     return (
         df.select(F.col(id_col).alias("docID"), term_freqs_udf(F.col(text_col)).alias("_tf"))
-        .select("docID", F.explode(F.col("_tf.tf_map")).alias("term", "tf"))
+        .select("docID", F.explode(F.col("_tf.tf_map")).alias("term", "tf"), F.col("_tf.dl").alias("dl"))
     )
 
 

@@ -16,13 +16,19 @@ where ``dlq`` is the SmallFloat-byte4 *quantized* doc length
 numerator factor (rank-neutral); we follow.
 
 Plan shape (scale notes):
-- query terms are an ``isin`` predicate on the postings scan (no term
-  table, so no side job to build and broadcast one); the postings side is
-  filtered *before* any aggregation, so only rows for query terms move.
-- document frequency per term is computed from the filtered postings
-  (postings rows are distinct (term, docID) pairs), then broadcast back.
-- one final ``groupBy(docID)`` shuffle over candidate rows only
-  (|query terms| lists), never the corpus.
+- every scoring input is a column of the postings table
+  (:func:`scoring_postings`): each ``(docID, term, tf)`` row also carries
+  its document's ``dlq`` and its term's index-wide document count
+  ``ndoc``, stored once when the engine is cached — Lucene's norms and
+  term statistics, read per posting instead of rebuilt per query (the
+  phrase paths read their terms' ``ndoc`` from the same rows). Building
+  it holds the per-term counts on the driver up to the
+  ``max_broadcast_expansion`` cap; a larger vocabulary is joined back by
+  a shuffle instead.
+- query terms are an ``isin`` predicate on that table's scan (no term
+  table, no df aggregation, no doc-length join), so a clause is one
+  filtered scan plus one ``groupBy(docID)`` shuffle over candidate rows
+  only (|query terms| lists), never the corpus.
 
 Tie-break on equal scores is docID ascending — the reference's
 coordinator merge comparator (``processor/combination/ScoreCombiner.java:43-56``).
@@ -33,6 +39,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from neural_search_spark.analysis.tokenizer import (
@@ -87,10 +94,62 @@ def idf_col(n_docs: int, ndoc_col) -> "F.Column":
     return F.log(F.lit(1.0) + (n - ndoc_col + F.lit(0.5)) / (ndoc_col + F.lit(0.5)))
 
 
+def scoring_postings(
+    corpus: DataFrame, text_col: str, id_col: str, cache: bool = False
+) -> DataFrame:
+    """corpus → (docID, term, tf, dlq, ndoc): every BM25 input as a
+    posting column. ``dlq`` comes from the tokenizer pass that counts the
+    terms (:func:`term_freq_rows`); ``ndoc`` is the term's index-wide
+    document count (postings rows are distinct (term, docID)).
+
+    The per-term counts are Lucene's terms dictionary. Up to the
+    ``max_broadcast_expansion`` setting's number of terms they are brought
+    to the driver (driver memory grows with the vocabulary, up to that
+    cap) and looked up per row: no join and no shuffle, so the table keeps
+    the corpus partitioning, a clause scan runs one task per corpus
+    partition, and plans over it show only the query's own operators. A
+    larger vocabulary joins the counts back by a shuffle on ``term``
+    instead, so the driver never holds it. With ``cache`` the table is
+    cached and materialized now (tokenized rows are cached for the build
+    only)."""
+    from neural_search_spark import settings
+
+    raw = term_freq_rows(corpus, text_col, id_col).select(
+        "docID", "term", "tf", quantize_length_col("dl").alias("dlq")
+    )
+    if cache:
+        raw = raw.cache()
+    cap = int(settings.get("max_broadcast_expansion"))
+    dfreq = raw.groupBy("term").agg(F.count("*").alias("ndoc"))
+    rows = dfreq.limit(cap + 1).collect()  # ≤ cap + 1 rows on the driver
+    if len(rows) <= cap:
+        counts = {r["term"]: r["ndoc"] for r in rows}
+
+        @F.pandas_udf("long")
+        def ndoc(terms: pd.Series) -> pd.Series:
+            return terms.map(counts)
+
+        table = raw.select("*", ndoc(F.col("term")).alias("ndoc"))
+    else:
+        table = raw.join(dfreq.hint("shuffle_hash"), "term").select(
+            "docID", "term", "tf", "dlq", "ndoc"
+        )
+    if cache:
+        table = table.cache()
+        table.count()
+        raw.unpersist()
+    return table
+
+
+def _bm25_term_score(stats: CorpusStats, k1: float, b: float):
+    """One posting row's BM25 contribution, from its own columns."""
+    tf = F.col("tf").cast("double")
+    tf_norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / F.lit(stats.avgdl)))
+    return idf_col(stats.n_docs, F.col("ndoc")) * tf_norm
+
+
 def bm25_clause_scores(
-    spark,
     postings: DataFrame,
-    doclens: DataFrame,
     stats: CorpusStats,
     terms: list[str],
     k1: float = K1,
@@ -101,13 +160,12 @@ def bm25_clause_scores(
 ) -> DataFrame:
     """Score one lexical clause (match/term) → (docID, score).
 
-    ``postings`` is the long-form (docID, term, tf) DataFrame (from
-    :func:`term_freq_rows` or the compressed-index reader); ``doclens``
-    carries (docID, dl, dlq). ``candidate_docs`` (optional, one ``docID``
-    column) restricts *membership* only — per Lucene semantics a pushed
-    filter never changes idf/avgdl, so document frequency is computed
-    before the filter is applied (``HybridQueryBuilder.java:107-122``
-    pushes filters into clauses; Lucene stats stay index-wide).
+    ``postings`` is a :func:`scoring_postings` table (docID, term, tf,
+    dlq, ndoc). ``candidate_docs`` (optional, one ``docID`` column)
+    restricts *membership* only — per Lucene semantics a pushed filter
+    never changes idf/avgdl, and ``ndoc`` was counted over the whole
+    index before any filter (``HybridQueryBuilder.java:107-122`` pushes
+    filters into clauses; Lucene stats stay index-wide).
 
     ``operator`` — OpenSearch-core ``match`` semantics: ``"or"`` (default,
     any term matches) or ``"and"`` (every distinct query term must occur —
@@ -124,16 +182,8 @@ def bm25_clause_scores(
             F.col("id").alias("docID"), F.lit(0.0).alias("score")
         )
     matched = postings.where(F.col("term").isin(terms))
-    # document frequency per query term over the full corpus: postings rows
-    # are distinct (term, docID), so a plain count is n_t
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
     if candidate_docs is not None:
         matched = matched.join(candidate_docs.select("docID"), "docID", "semi")
-    matched = matched.join(F.broadcast(dfreq), "term").join(doclens, "docID")
-    avgdl = F.lit(stats.avgdl)
-    tf = F.col("tf").cast("double")
-    tf_norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl))
-    term_score = idf_col(stats.n_docs, F.col("ndoc")) * tf_norm
     need = None
     if operator == "and":
         need = len(terms)
@@ -143,7 +193,7 @@ def bm25_clause_scores(
         # msm=5 on a 3-term query must yield an empty result
         need = int(minimum_should_match)
     agg = matched.groupBy("docID").agg(
-        F.sum(term_score).alias("score"), F.count("*").alias("_nt")
+        F.sum(_bm25_term_score(stats, k1, b)).alias("score"), F.count("*").alias("_nt")
     )
     if need is not None:
         # postings rows are distinct (term, docID) → _nt counts distinct
@@ -203,9 +253,7 @@ def match_bool_prefix_scores(engine: "BM25Engine", query_text: str) -> DataFrame
     parts = [prefix_query_scores(engine, prefix)]
     if fixed:
         parts.append(
-            bm25_clause_scores(
-                engine.spark, engine.postings, engine.doclens, engine.stats, fixed
-            )
+            bm25_clause_scores(engine.postings, engine.stats, fixed)
         )
     long = parts[0]
     for p in parts[1:]:
@@ -216,7 +264,6 @@ def match_bool_prefix_scores(engine: "BM25Engine", query_text: str) -> DataFrame
 def bm25_batch_scores(
     spark,
     postings: DataFrame,
-    doclens: DataFrame,
     stats: CorpusStats,
     queries: dict[int, list[str]],
     k1: float = K1,
@@ -234,9 +281,11 @@ def bm25_batch_scores(
     SmallFloat-quantized norms).
 
     Scale shape: the query table broadcasts (it is query-log-sized, not
-    corpus-sized); postings shuffle once keyed by (qid, docID). A term
-    shared by q queries fans its postings rows out q times — that IS the
-    semantics (each query must see the term's postings)."""
+    corpus-sized) into an ``isin``-filtered scan of the
+    :func:`scoring_postings` table; matched rows shuffle once keyed by
+    (qid, docID). A term shared by q queries fans its postings rows out q
+    times — that IS the semantics (each query must see the term's
+    postings)."""
     pairs = sorted(
         {(int(qid), t) for qid, ts in queries.items() for t in ts if t}
     )
@@ -247,21 +296,8 @@ def bm25_batch_scores(
             F.lit(0.0).alias("score"),
         )
     qt = F.broadcast(spark.createDataFrame(pairs, "qid int, term string"))
-    dfreq = (
-        postings.join(F.broadcast(qt.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.count("*").alias("ndoc"))
-    )
-    matched = (
-        postings.join(qt, "term")
-        .join(F.broadcast(dfreq), "term")
-        .join(doclens, "docID")
-    )
-    avgdl = F.lit(stats.avgdl)
-    tf = F.col("tf").cast("double")
-    tf_norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dlq") / avgdl))
-    term_score = idf_col(stats.n_docs, F.col("ndoc")) * tf_norm
-    return matched.groupBy("qid", "docID").agg(F.sum(term_score).alias("score"))
+    matched = postings.where(F.col("term").isin(sorted({t for _, t in pairs}))).join(qt, "term")
+    return matched.groupBy("qid", "docID").agg(F.sum(_bm25_term_score(stats, k1, b)).alias("score"))
 
 
 def bm25_batch_topk(
@@ -273,9 +309,7 @@ def bm25_batch_topk(
     so the cut is reproducible across engines."""
     from pyspark.sql import Window
 
-    scored = bm25_batch_scores(
-        engine.spark, engine.postings, engine.doclens, engine.stats, queries
-    )
+    scored = bm25_batch_scores(engine.spark, engine.postings, engine.stats, queries)
     r4 = F.round(F.col("score"), 4)
     w = Window.partitionBy("qid").orderBy(r4.desc(), F.col("docID").asc())
     return (
@@ -327,9 +361,12 @@ def phrase_freq_text_col(text_col, terms: list[str]):
     start offset counts once — OVERLAPPING phrase occurrences included
     (Java's matcher advances one char past an empty match), exactly the
     per-position count of the array form. Caller must guarantee every
-    term matches ``^[a-z0-9_]+$`` (true for any analyzer output)."""
+    term matches ``^[a-z0-9_]+$`` (true for any analyzer output); any
+    other term raises ``ValueError``, since it would be spliced into the
+    regex unescaped."""
     m = len(terms)
-    assert m >= 1 and all(_TOKEN_RE.fullmatch(t) for t in terms), terms
+    if m < 1 or not all(_TOKEN_RE.fullmatch(t) for t in terms):
+        raise ValueError(f"phrase terms must be analyzer tokens [a-z0-9_]+, got {terms!r}")
     needle = "[^a-z0-9_]+".join(terms)
     pat = f"(?=(?<![a-z0-9_]){needle}(?![a-z0-9_]))"
     return F.regexp_count(F.lower(text_col), F.lit(pat)).cast("int")
@@ -356,6 +393,9 @@ def match_phrase_scores(
     ``PhraseWeight`` builds one ``TermStatistics`` per phrase position).
     Only docs with ``ptf > 0`` match.
 
+    ``postings`` is a :func:`scoring_postings` table; the phrase idf
+    reads each term's stored ``ndoc``.
+
     Plan = Lucene's two-step exact-phrase strategy, Spark-shaped:
     1. **postings intersection** — docs containing ALL distinct terms
        (broadcast the tiny term list into the postings scan, one groupBy
@@ -375,9 +415,9 @@ def match_phrase_scores(
         spark.createDataFrame([(t,) for t in distinct_terms], "term string")
     )
     matched = postings.join(qt, "term")
-    # index-wide document frequency per distinct term (Lucene stats are
-    # filter/candidate-independent)
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
+    # index-wide document frequency per distinct term, as stored on its
+    # postings rows (Lucene stats are filter/candidate-independent)
+    dfreq = matched.select("term", "ndoc").distinct()
     # phrase idf: one row per phrase POSITION joined to its term's ndoc
     pos_df = F.broadcast(
         spark.createDataFrame(list(enumerate(terms)), "pos int, term string")
@@ -469,10 +509,8 @@ def multi_match_scores(
                 query_text, k1=k1, b=b, text_col=fld, id_col=engine.id_col,
             )
         else:
-            postings, doclens, stats = engine.field_artifacts(fld)
-            sc = bm25_clause_scores(
-                engine.spark, postings, doclens, stats, terms, k1=k1, b=b
-            )
+            postings, _doclens, stats = engine.field_artifacts(fld)
+            sc = bm25_clause_scores(postings, stats, terms, k1=k1, b=b)
         per_field.append(
             sc.select("docID", (F.col("score") * F.lit(float(boost))).alias("fscore"))
         )
@@ -785,21 +823,35 @@ class BM25Engine:
         self.corpus = corpus
         self.text_col = text_col
         self.id_col = id_col
-        self.postings = term_freq_rows(corpus, text_col, id_col)
+        self._cached = False
         self.doclens = quantized_doc_lengths(corpus, text_col, id_col)
+        self._postings: DataFrame | None = None
         self._stats: CorpusStats | None = None
         self._term_dict: DataFrame | None = None
-        self._cached = False
         # per-field (postings, doclens, stats) for multi_match — built once
         # per engine, the Spark analog of Lucene's one-index-per-field
         self._field_artifacts: dict[str, tuple[DataFrame, DataFrame, CorpusStats]] = {}
 
+    @property
+    def postings(self) -> DataFrame:
+        """The :func:`scoring_postings` table (docID, term, tf, dlq, ndoc),
+        built on first use."""
+        if self._postings is None:
+            self._postings = scoring_postings(self.corpus, self.text_col, self.id_col, self._cached)
+        return self._postings
+
     def cache(self) -> "BM25Engine":
-        """Materialize derived tables once for repeated queries (query-time
-        hot path; at scale this is the persisted postings index instead)."""
-        self.postings = self.postings.cache()
-        self.doclens = self.doclens.cache()
-        self._cached = True
+        """Cache the doclens and build the postings table every BM25
+        clause scores from, materialized before this returns (at scale
+        this is the persisted postings index instead). The build holds
+        O(vocabulary) per-term counts on the driver, at most
+        ``max_broadcast_expansion`` of them (see :func:`scoring_postings`).
+        ``postings.unpersist()`` and ``doclens.unpersist()`` release all
+        it cached."""
+        if not self._cached:
+            self._cached = True
+            self.doclens = self.doclens.cache()
+            self._postings = scoring_postings(self.corpus, self.text_col, self.id_col, cache=True)
         return self
 
     @property
@@ -821,15 +873,17 @@ class BM25Engine:
     def field_artifacts(self, field: str) -> tuple[DataFrame, DataFrame, CorpusStats]:
         """(postings, doclens, stats) for an arbitrary text field, derived
         once per engine and reused across queries (multi_match hot path —
-        at 100 TB these are per-field persisted indexes). The engine's own
-        text field aliases the already-cached primary artifacts."""
+        at 100 TB these are per-field persisted indexes). ``postings`` is
+        that field's :func:`scoring_postings` table, built like the
+        engine's own. The engine's own text field aliases the
+        already-cached primary artifacts."""
         if field == self.text_col:
             return self.postings, self.doclens, self.stats
         if field not in self._field_artifacts:
-            p = term_freq_rows(self.corpus, field, self.id_col)
+            p = scoring_postings(self.corpus, field, self.id_col, self._cached)
             d = quantized_doc_lengths(self.corpus, field, self.id_col)
             if self._cached:
-                p, d = p.cache(), d.cache()
+                d = d.cache()
             self._field_artifacts[field] = (p, d, corpus_stats_from_doclens(d))
         return self._field_artifacts[field]
 
@@ -852,7 +906,7 @@ class BM25Engine:
         _stats.record_event("match_query_requests")
         cand = self.corpus.where(filter_expr).select(F.col(self.id_col).alias("docID")) if filter_expr else None
         return bm25_clause_scores(
-            self.spark, self.postings, self.doclens, self.stats,
+            self.postings, self.stats,
             tokenize_text(query_text), k1=k1, b=b, candidate_docs=cand,
             operator=operator, minimum_should_match=minimum_should_match,
         )
@@ -862,9 +916,7 @@ class BM25Engine:
         from neural_search_spark import stats as _stats
 
         _stats.record_event("term_query_requests")
-        return bm25_clause_scores(
-            self.spark, self.postings, self.doclens, self.stats, [term], k1=k1, b=b
-        )
+        return bm25_clause_scores(self.postings, self.stats, [term], k1=k1, b=b)
 
     def match_phrase(self, phrase: str, k1: float = K1, b: float = B) -> DataFrame:
         """``match_phrase`` query: exact adjacent-run phrase (slop 0)."""
@@ -905,32 +957,25 @@ def more_like_this_scores(
     break differently.
 
     Scale shape: the seed side is ONE document's postings (pushed-down
-    docID filter on the postings scan), its df lookup a broadcast
-    semi-join pruned to those terms; the collect fetches
-    ≤ max_query_terms rows. Scoring reuses the standard clause path."""
+    docID filter on the postings scan), each row carrying its term's df
+    (``ndoc``); the collect fetches ≤ max_query_terms rows. Scoring reuses
+    the standard clause path."""
     from neural_search_spark import stats as _stats
 
     _stats.record_event("mlt_query_requests")
-    seed = engine.postings.where(
-        (F.col("docID") == int(seed_doc)) & (F.col("tf") >= int(min_term_freq))
-    ).select("term", "tf")
-    dfc = (
-        engine.postings.join(F.broadcast(seed.select("term")), "term", "semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("ndoc"))
-    )
     cand = (
-        seed.join(dfc, "term")
-        .where(F.col("ndoc") >= int(min_doc_freq))
+        engine.postings.where(
+            (F.col("docID") == int(seed_doc))
+            & (F.col("tf") >= int(min_term_freq))
+            & (F.col("ndoc") >= int(min_doc_freq))
+        )
         .orderBy(F.col("tf").desc(), F.col("ndoc").asc(), F.col("term").asc())
         .limit(int(max_query_terms))
     )
     terms = [r["term"] for r in cand.collect()]  # O(max_query_terms) rows
     if not terms:
         return engine.spark.createDataFrame([], "docID long, score double")
-    scored = bm25_clause_scores(
-        engine.spark, engine.postings, engine.doclens, engine.stats, terms, k1=k1, b=b
-    )
+    scored = bm25_clause_scores(engine.postings, engine.stats, terms, k1=k1, b=b)
     return scored.where(F.col("docID") != int(seed_doc))
 
 
@@ -1063,7 +1108,7 @@ def match_phrase_prefix_scores(
     m = len(terms)
     distinct_fixed = sorted(set(fixed))
     matched = postings.where(F.col("term").isin(distinct_fixed))
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("ndoc"))
+    dfreq = matched.select("term", "ndoc").distinct()
     pos_df = F.broadcast(
         spark.createDataFrame(list(enumerate(fixed)), "pos int, term string")
     )

@@ -349,7 +349,7 @@ def hybrid_batch_topk(
     keyed = {
         int(qid) * max_sub + ci: terms for qid, clauses in batches.items() for ci, terms in enumerate(clauses)
     }
-    scored = bm25_batch_scores(spark, engine.postings, engine.doclens, engine.stats, keyed)
+    scored = bm25_batch_scores(spark, engine.postings, engine.stats, keyed)
     clause_scores = scored.select(
         F.floor(F.col("qid") / max_sub).cast("int").alias("qid"),
         F.pmod("qid", F.lit(max_sub)).alias("_c"),

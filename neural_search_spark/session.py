@@ -7,6 +7,8 @@ the local[N] sandbox:
 - Arrow on (all Python compute goes through vectorized pandas/Arrow UDFs;
   never row-at-a-time Python — BASELINE.json input_hint).
 - shuffle partitions sized by env (cluster: ~2-3x total cores; sandbox: 32).
+- DataFrame call-site debugging off (plan building is driver-bound at
+  query scale).
 """
 
 from __future__ import annotations
@@ -55,6 +57,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.host", "127.0.0.1")
+        # PySpark otherwise wraps every Column/functions call in py4j round
+        # trips (active session, conf read, call-site origin set/clear) and
+        # a Python stack walk — most of a query's plan-build time. Errors
+        # still raise; their messages lose the Python call-site fragment.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

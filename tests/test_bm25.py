@@ -54,6 +54,57 @@ def test_all_scores_match(engine, oracle):
         assert abs(got[d] - float(want[d])) <= 1e-3
 
 
+def test_postings_table_carries_doc_length_and_df(spark, engine):
+    """Each posting row carries its document's ``dlq`` and its term's
+    index-wide document count, so clauses need no side joins."""
+    from pyspark.sql import functions as F
+
+    p = engine.postings
+    assert p.columns == ["docID", "term", "tf", "dlq", "ndoc"]
+    counted = p.groupBy("term").agg(F.count("*").alias("n"))
+    assert p.join(counted, "term").where(F.col("ndoc") != F.col("n")).count() == 0
+    lens = engine.doclens.select("docID", F.col("dlq").alias("want"))
+    assert p.join(lens, "docID").where(F.col("dlq") != F.col("want")).count() == 0
+    assert p.count() == engine.postings.join(lens, "docID").count()
+
+
+def test_postings_table_over_vocabulary_cap_joins_counts(engine, tiny_corpus):
+    """A vocabulary over ``max_broadcast_expansion`` never goes to the
+    driver: ``ndoc`` is joined back by a shuffle, and the table's rows and
+    a clause's scores are the same as with the driver-side lookup."""
+    from neural_search_spark import settings
+    from neural_search_spark.search.bm25 import bm25_clause_scores, scoring_postings
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "ndoc(term" in plan(scoring_postings(tiny_corpus, "content", "docID"))
+    with settings.override(max_broadcast_expansion=4):
+        table = scoring_postings(tiny_corpus, "content", "docID")
+    assert "ShuffledHashJoin" in plan(table) and "ndoc(term" not in plan(table)
+    assert sorted(map(tuple, table.collect())) == sorted(map(tuple, engine.postings.collect()))
+    terms = ["import", "ident0", "self"]
+    got = {r["docID"]: r["score"] for r in bm25_clause_scores(table, engine.stats, terms).collect()}
+    want = {r["docID"]: r["score"] for r in bm25_clause_scores(engine.postings, engine.stats, terms).collect()}
+    # the same terms summed in another row order: equal up to rounding
+    assert got.keys() == want.keys() and got
+    assert all(abs(got[d] - want[d]) <= 1e-12 for d in got)
+
+
+def test_engine_release_drops_every_cached_table(spark, tiny_corpus):
+    """``cache()`` leaves exactly the postings table and the doclens cached
+    (the tokenized postings it was built from are released), and
+    unpersisting those two returns the CacheManager to where it was."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    # a corpus no other engine in this session caches, so no entry is shared
+    eng = BM25Engine(spark, tiny_corpus.where("docID % 2 = 0")).cache()
+    assert cm.numCachedEntries() == before + 2
+    eng.postings.unpersist()
+    eng.doclens.unpersist()
+    assert cm.numCachedEntries() == before
+
+
 def test_sha256_invariant(tiny_corpus):
     from neural_search_spark.corpus import assert_sha256_invariant
 

@@ -57,6 +57,22 @@ def test_index_matches_dataframe_path(spark, index_dir, engine, query, prune):
     )
 
 
+def test_wand_query_job_ceiling(spark, index_dir, job_count):
+    """Fence on the block-max query's fixed overhead: the global df
+    collect, the two cached-table scans grouped by shard, the cogroup
+    kernel and the top-k cut. Measured on this session shape (local[4], 8
+    shuffle partitions); a rise means a new side job per query."""
+    idx = BlockMaxIndex(spark, index_dir).cache()
+    try:
+        idx.match_topk(QUERIES[0], k=10).collect()  # warm the cached tables
+        jobs, cached = job_count(lambda: idx.match_topk(QUERIES[0], k=10).collect())
+    finally:
+        idx.postings.unpersist()
+        idx.doclens.unpersist()
+    assert cached == 0
+    assert jobs <= 5
+
+
 def test_stats_match_corpus(spark, index_dir, engine):
     idx = BlockMaxIndex(spark, index_dir)
     assert idx.stats["n_docs"] == engine.stats.n_docs

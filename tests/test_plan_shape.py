@@ -96,3 +96,25 @@ def test_two_phase_spec_rescore_broadcasts_the_window(spark, entry):
         p = _plan(entry.queries()[key](spark, SF_DIR))
         assert "SortMergeJoin" not in p, key
         assert "TakeOrderedAndProject" in p, key
+
+
+def test_pq_code_table_builds_before_its_codebooks(spark, entry):
+    """Not a plan shape but the same registry: the stored PQ code table,
+    asked for first on a fresh (session, corpus) key, trains its own
+    codebooks instead of raising KeyError."""
+    import os
+
+    from pyspark.sql import DataFrame
+
+    sf_dir = os.path.join(SF_DIR, "")  # same data, a key no other test warmed
+    key = (id(spark), sf_dir)
+    try:
+        codes = entry._pq_code_artifacts(spark, sf_dir)
+        assert codes.count() == entry._embeddings(spark, sf_dir).count()
+        assert entry._pq_codebook_artifacts(spark, sf_dir) is entry._PQ_CODEBOOKS[key]
+    finally:
+        for cache in (entry._PQ_CODES, entry._PQ_CODEBOOKS, entry._IVF_ARTIFACTS):
+            held = cache.pop(key, ())
+            for df in held if isinstance(held, tuple) else (held,):
+                if isinstance(df, DataFrame):
+                    df.unpersist()

@@ -52,6 +52,18 @@ class TestBatchBM25:
         rows = out.groupBy("qid").count().collect()
         assert all(r["count"] <= 3 for r in rows) and len(rows) == 2
 
+    def test_job_ceiling(self, engine, job_count):
+        """A batch scores from the engine's postings table in one plan:
+        the query-table broadcast, one scan and (qid, docID) aggregation,
+        the per-qid window cut and the output sort — no df or doc-length
+        side jobs (11 jobs before the table carried ``dlq`` and ``ndoc``).
+        Measured on this session shape (local[4], 8 shuffle partitions)."""
+        queries = {0: ["import", "ident1"], 1: ["def", "class"], 2: ["return", "self", "ident5"]}
+        bm25_batch_topk(engine, queries, k=5).collect()  # warm
+        jobs, cached = job_count(lambda: bm25_batch_topk(engine, queries, k=5).collect())
+        assert cached == 0
+        assert jobs <= 6
+
 
 class TestBatchNeural:
     def test_batch_equals_per_query(self, spark, tiny_corpus):

@@ -6,6 +6,9 @@ obviously-correct formulation it replaced (not just against fixtures).
 from __future__ import annotations
 
 import math
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -51,8 +54,26 @@ def test_phrase_freq_text_matches_token_form(spark):
 def test_phrase_freq_text_rejects_non_token_terms():
     from neural_search_spark.search.bm25 import phrase_freq_text_col
 
-    with pytest.raises(AssertionError):
-        phrase_freq_text_col(F.col("content"), ["has space"])
+    for terms in (["has space"], ["a.b"], ["part", "f*"], []):
+        with pytest.raises(ValueError):
+            phrase_freq_text_col(F.col("content"), terms)
+
+
+def test_phrase_freq_text_rejects_non_token_terms_without_asserts():
+    """The check is not an ``assert``: it holds under ``python -O`` too,
+    where a regex metacharacter would otherwise reach the pattern."""
+    code = (
+        "from neural_search_spark.search.bm25 import phrase_freq_text_col\n"
+        "try:\n"
+        "    phrase_freq_text_col(None, ['a.b'])\n"
+        "except ValueError:\n"
+        "    print('ValueError')\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", code], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert out.stdout.strip() == "ValueError", out.stderr[-2000:]
 
 
 # ---------------------------------------------------------------------------

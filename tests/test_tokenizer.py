@@ -40,5 +40,7 @@ def test_term_freq_rows(spark):
     from neural_search_spark.analysis.tokenizer import term_freq_rows
 
     df = spark.createDataFrame([(0, "a b a c a b")], "docID long, content string")
-    rows = {(r["term"]): r["tf"] for r in term_freq_rows(df, "content", "docID").collect()}
+    out = term_freq_rows(df, "content", "docID").collect()
+    rows = {(r["term"]): r["tf"] for r in out}
     assert rows == {"a": 3, "b": 2, "c": 1}
+    assert {r["dl"] for r in out} == {6}
